@@ -4,12 +4,6 @@ quick-start (README.md:119-155: `ScanTrades(market, security, interval)` →
 its Spark equivalent: a method returning an *unexecuted* DataFrame (the
 lazy TimeSeries handle) on which Spark's own fold surface (count/collect/
 limit/agg) replaces the iteratee run.
-
-There is no server: the reference's client↔server RPC existed to resolve
-uids and build scan key ranges (MarketDbApp.scala:47-53, MarketDB.scala:
-66-106); Catalyst does both (predicate pushdown + partition pruning) from
-the declarative filter, so "server plans, client executes" becomes one
-lazy plan.
 """
 
 from __future__ import annotations

@@ -201,8 +201,8 @@ def _quoted(name: str) -> str:
 
 
 def dot(a: Column | str, b: Column | str) -> Column:
-    # a lone str normalizes to a Column rather than silently falling
-    # through to the py4j-heavy lambda path both args being str avoids
+    # only the both-str case gets the single-parse SQL twin; a lone str
+    # arg is normalized to a Column so the mixed case takes zip_with
     if isinstance(a, str) and isinstance(b, str):
         return F.expr(_DOT_SQL.format(a=_quoted(a), b=_quoted(b)))
     a = F.col(a) if isinstance(a, str) else a

@@ -1008,7 +1008,7 @@ def stream_queue_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from marketdb_spark.catalog import load
-    from marketdb_spark.streaming.queuesource import register_queue_source
+    from marketdb_spark.streaming.queuesource import QUEUE_SCHEMA, register_queue_source
 
     register_queue_source(spark)
     work = tempfile.mkdtemp(prefix="stream_queue_")
@@ -1050,7 +1050,7 @@ def stream_queue_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             # explicit schema: skips the engine's per-load schema-
             # resolution worker spawn on the Python DataSource lane
             spark.readStream.format("spoolqueue_dist")
-            .schema("segment string, line_no long, value string")
+            .schema(QUEUE_SCHEMA)
             .load(spool)
             .select(
                 F.from_json(
@@ -1110,7 +1110,7 @@ def stream_queue_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from marketdb_spark.catalog import load
-    from marketdb_spark.streaming.queuesource import register_queue_source
+    from marketdb_spark.streaming.queuesource import QUEUE_SCHEMA, register_queue_source
 
     register_queue_source(spark)
     work = tempfile.mkdtemp(prefix="stream_queue_cap_")
@@ -1139,7 +1139,7 @@ def stream_queue_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
             # explicit schema: skips the engine's per-load schema-
             # resolution worker spawn on the Python DataSource lane
             spark.readStream.format("spoolqueue_dist")
-            .schema("segment string, line_no long, value string")
+            .schema(QUEUE_SCHEMA)
             .option("maxLinesPerTrigger", cap)
             .load(spool)
             .select(

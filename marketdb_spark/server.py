@@ -4,10 +4,19 @@ The reference serves time-series scans over a finagle binary protocol:
 clients Open a scan (getting a scanner handle), pull row batches, and
 Close (marketdb-api/.../api/MarketDbProtocol.scala:17-203, served at
 marketdb-app/.../MarketDbApp.scala:47-53). This is the same service
-surface on plain TCP + newline-delimited JSON (stdlib only — no finagle,
-no thrift): a threaded socket server in the Spark DRIVER process that
-plans scans with the lazy-DataFrame façade (client.MarketDb) and streams
-results back.
+surface on plain TCP + newline-delimited JSON, with no Spark job per
+request.
+
+As the reference's server maps a request to a key range and reads the
+store directly (MarketDB.scala:66-106), each scan is planned to the
+partition directories it covers (``market=M``, each ``date=D`` in the
+interval; listed per request, so no cache to invalidate) and read in
+place with ``pyarrow.dataset``, the security and inclusive time bounds
+pushed down to row-group statistics. Rows match the lazy Spark handles
+(client.MarketDb): ordered by (time, event id), columns ending
+``market``, ``date``. Server memory is one request's result; an open
+cursor holds its result until exhausted or closed, at most
+MAX_OPEN_SCANS of them.
 
 Protocol (one JSON object per line, request → response(s)):
 
@@ -21,71 +30,84 @@ Protocol (one JSON object per line, request → response(s)):
   {"op": "close",   "scan_id": id}              → {"closed": true}
 
 The cursor ops mirror the reference's Open/ReadRows/Close scanner
-lifecycle; `next` pulls from a server-side ``toLocalIterator`` so only
-the requested batch is materialized driver-side — the executor-side scan
-stays lazy/partition-streamed exactly like the in-process path.
-
-Scale note: this façade is a control-plane convenience (the reference's
-own deployment shape — one service fronting the store). Bulk analytics
-should go through the DataFrame API directly; the server never collects
-more than the batch a client asked for.
-
-BULK DATA LANE (op "fetch_arrow"): row-per-JSON-line is a control-plane
-format, not a data plane — for bulk pulls the server streams the same
-scan as ARROW IPC instead: one JSON header line, then u32-BE-framed
-independent Arrow IPC streams (one per record batch of ``batch_rows``
-rows, schema repeated per frame so each frame is self-describing), then
-a zero-length frame as terminator. Memory stays bounded to one batch on
-both ends (the server still pulls from toLocalIterator), and the client
-gets typed columnar batches it can hand to pandas/duckdb zero-parse —
-the shape the reference's finagle byte-batches wanted to be.
+lifecycle. BULK DATA LANE (op "fetch_arrow"): the same scan as one JSON
+header line, then u32-BE-framed Arrow IPC streams (one per record batch
+of ``batch_rows`` rows, each self-describing), then a zero-length
+terminator frame — typed columnar batches a client hands to
+pandas/duckdb without parsing.
 """
 
 from __future__ import annotations
 
+import io
 import json
+import os
 import socket
 import socketserver
 import threading
+from datetime import date, datetime, timezone
 from typing import Any
+from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.fs as pafs
 
-from marketdb_spark.client import MarketDb
+# each open scan holds its result: `open` is refused at this many until
+# a `close` or an exhausted scan frees a slot
+MAX_OPEN_SCANS = 1024
+
+# Spark writes timestamps as INT96 by default; TimestampType is µs
+_FORMAT = ds.ParquetFileFormat(
+    read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+)
+_PARTITIONING = ds.partitioning(
+    pa.schema([("market", pa.string()), ("date", pa.date32())]), flavor="hive"
+)
+_FILE = pafs.FileType.File
 
 
 def _json_default(v: Any) -> str:
     return str(v)  # timestamps/decimals → ISO-ish strings
 
 
-def _arrow_schema(df: DataFrame):
-    """The scan's Arrow schema with every timestamp — including ones
-    nested in struct/list/map columns — as naive microseconds: Row
-    values from toLocalIterator carry session-local naive datetimes at
-    any nesting depth, so a tz-stamped arrow field would reinterpret
-    them."""
-    import pyarrow as pa
+def _bound(v: str) -> datetime:
+    """An interval end as a naive-UTC timestamp (the session time zone)."""
+    t = datetime.fromisoformat(v)
+    return t if t.tzinfo is None else t.astimezone(timezone.utc).replace(tzinfo=None)
 
-    from pyspark.sql.pandas.types import to_arrow_schema
 
-    def strip_tz(t: "pa.DataType") -> "pa.DataType":
-        if pa.types.is_timestamp(t):
-            return pa.timestamp(t.unit)
-        if pa.types.is_struct(t):
-            return pa.struct(
-                [f.with_type(strip_tz(f.type)) for f in t]
-            )
-        if pa.types.is_list(t):
-            return pa.list_(strip_tz(t.value_type))
-        if pa.types.is_large_list(t):
-            return pa.large_list(strip_tz(t.value_type))
-        if pa.types.is_map(t):
-            return pa.map_(strip_tz(t.key_type), strip_tz(t.item_type))
-        return t
+def _visible(fs: pafs.FileSystem, d: str) -> list[pafs.FileInfo]:
+    """The entries of ``d`` Spark reads: not ``_``- or ``.``-prefixed."""
+    return [
+        i for i in fs.get_file_info(pafs.FileSelector(d))
+        if not i.base_name.startswith(("_", "."))
+    ]
 
-    return pa.schema(
-        [f.with_type(strip_tz(f.type)) for f in to_arrow_schema(df.schema)]
-    )
+
+def _partitions(fs: pafs.FileSystem, d: str, key: str) -> dict[str, str]:
+    """{unescaped value: path} of the ``key=value`` directories in ``d``."""
+    return {
+        unquote(i.base_name[len(key) + 1:]): i.path
+        for i in _visible(fs, d)
+        if i.base_name.startswith(key + "=") and i.type != _FILE
+    }
+
+
+def _first_file(fs: pafs.FileSystem, d: str) -> str | None:
+    """The first data file under ``d`` in path order."""
+    for i in sorted(_visible(fs, d), key=lambda i: i.base_name):
+        f = i.path if i.type == _FILE else _first_file(fs, i.path)
+        if f is not None:
+            return f
+    return None
+
+
+class _Scan:
+    """An open cursor; its lock serializes concurrent `next`s."""
+
+    def __init__(self, table: pa.Table) -> None:
+        self.table, self.pos, self.lock = table, 0, threading.Lock()
 
 
 class _Handler(socketserver.StreamRequestHandler):
@@ -130,20 +152,16 @@ class _ThreadedTCPServer(socketserver.ThreadingTCPServer):
 
 
 class MarketDbServer:
-    """Serve MarketDb scans over TCP/ndjson. Runs inside the Spark driver
-    (the reference's MarketDbApp is likewise one process fronting the
-    store). ``port=0`` picks an ephemeral port — read ``self.port``."""
+    """Serve MarketDb scans over TCP/ndjson from the stores that
+    ``MarketDb.add_trades``/``add_orders`` write (the reference's
+    MarketDbApp is likewise one process fronting the store). ``spark`` is
+    kept for call compatibility; reads do not use it. ``port=0`` picks an
+    ephemeral port — read ``self.port``."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        trades_path: str,
-        orders_path: str,
-        host: str = "127.0.0.1",
-        port: int = 0,
-    ):
-        self.db = MarketDb(spark, trades_path=trades_path, orders_path=orders_path)
-        self._scans: dict[int, Any] = {}
+    def __init__(self, spark: Any, trades_path: str, orders_path: str,
+                 host: str = "127.0.0.1", port: int = 0):
+        self.trades_path, self.orders_path = trades_path, orders_path
+        self._scans: dict[int, _Scan] = {}
         self._next_scan = 1
         self._lock = threading.Lock()
         self._tcp = _ThreadedTCPServer((host, port), _Handler)
@@ -166,53 +184,75 @@ class MarketDbServer:
     def __exit__(self, *exc) -> None:
         self.stop()
 
-    # -- request dispatch (yields response objects) -------------------------
-    def _series(self, req: dict) -> DataFrame:
-        kind = req.get("kind", req.get("op"))
-        fn = self.db.trades if kind == "trades" else self.db.orders
-        return fn(req["market"], req["security"], tuple(req["interval"]))
+    # -- the one read path --------------------------------------------------
+    def _read(self, req: dict) -> pa.Table:
+        """The scan's rows: ``security`` in the inclusive interval, read
+        from the date directories the interval covers, ordered by (time,
+        event id), typed as Spark reads the store (nullable columns)."""
+        if req.get("kind", req.get("op")) == "trades":
+            path, id_col = self.trades_path, "trade_id"
+        else:
+            path, id_col = self.orders_path, "order_id"
+        start, end = (_bound(v) for v in req["interval"])
+        fs, root = pafs.FileSystem.from_uri(
+            path if "://" in path else os.path.abspath(path)
+        )
+        market_dir = _partitions(fs, root, "market").get(req["market"])
+        days = _partitions(fs, market_dir, "date") if market_dir else {}
+        files = [
+            i.path
+            for d, p in days.items()
+            if start.date() <= date.fromisoformat(d) <= end.date()
+            for i in _visible(fs, p)
+            if i.type == _FILE
+        ]
+        # Spark types a read by the footer of the store's first data file
+        # (by path); appends may order their columns differently
+        footer = _first_file(fs, root)
+        if footer is None:
+            raise FileNotFoundError(f"no parquet files under {path}")
+        opts = dict(format=_FORMAT, filesystem=fs, partitioning=_PARTITIONING,
+                    partition_base_dir=root)
+        schema = pa.schema(
+            [f.with_nullable(True) for f in ds.dataset([footer], **opts).schema]
+        )
+        t = ds.field("time")
+        at = (ds.field("security") == req["security"]) & (t >= start) & (t <= end)
+        table = ds.dataset(files, schema=schema, **opts).to_table(filter=at)
+        return table.sort_by([("time", "ascending"), (id_col, "ascending")])
 
+    # -- request dispatch (yields response objects) -------------------------
     def dispatch(self, req: dict):
         op = req.get("op")
         if op in ("trades", "orders"):
-            n = 0
-            for row in self._series(req).toLocalIterator():
-                n += 1
-                yield row.asDict(recursive=True)
-            yield {"done": n}
+            rows = self._read(req).to_pylist()
+            yield from rows
+            yield {"done": len(rows)}
         elif op == "count":
-            yield {"count": self._series(req).count()}
+            yield {"count": self._read(req).num_rows}
         elif op == "open":
-            # the reference's Open → ScannerDescriptor handle; the scan
-            # carries its own lock so concurrent `next`s on one scan_id
-            # serialize (a shared toLocalIterator is not thread-safe —
-            # interleaved next() calls would split rows across batches)
-            scan = self._series(req).toLocalIterator()
+            # the reference's Open → ScannerDescriptor handle
+            scan = _Scan(self._read(req))
             with self._lock:
+                if len(self._scans) >= MAX_OPEN_SCANS:
+                    yield {"error": "too many open scans"}
+                    return
                 scan_id = self._next_scan
                 self._next_scan += 1
-                self._scans[scan_id] = (scan, threading.Lock())
+                self._scans[scan_id] = scan
             yield {"scan_id": scan_id}
         elif op == "next":
-            entry = self._scans.get(req["scan_id"])
-            if entry is None:
+            scan = self._scans.get(req["scan_id"])
+            if scan is None:
                 yield {"error": "unknown scan_id"}
                 return
-            it, scan_lock = entry
-            want = int(req.get("n", 100))
-            rows: list[Any] = []
-            with scan_lock:
-                exhausted = False
-                while len(rows) < want:
-                    try:
-                        rows.append(next(it))
-                    except StopIteration:
-                        exhausted = True
-                        break
+            with scan.lock:
+                rows = scan.table.slice(scan.pos, int(req.get("n", 100))).to_pylist()
+                scan.pos += len(rows)
+                exhausted = scan.pos >= scan.table.num_rows
                 if exhausted:
                     self._scans.pop(req["scan_id"], None)
-            for row in rows:
-                yield row.asDict(recursive=True)
+            yield from rows
             yield {"batch_end": len(rows), "exhausted": exhausted}
         elif op == "fetch_arrow":
             yield from self._fetch_arrow(req)
@@ -223,52 +263,28 @@ class MarketDbServer:
             yield {"error": f"unknown op {op!r}"}
 
     def _fetch_arrow(self, req: dict):
-        """Bulk lane: the scan as u32-framed Arrow IPC streams (one per
-        record batch, self-describing), zero-length frame terminates,
-        then ONE JSON status line ({"frames_done": k} | {"error": ...}).
-        Pulls from toLocalIterator, so server memory is one batch.
+        """Bulk lane: header, frames, zero-length terminator, then ONE
+        JSON status line ({"frames_done": k} | {"error": ...}).
 
-        Errors after the header must stay IN-BAND: a raw JSON error line
-        where the client expects a length prefix would be read as a
-        bogus u32 and hang the connection — so a mid-stream failure
-        still sends the zero terminator and reports through the status
-        line (the client re-raises it instead of returning a silently
-        truncated table)."""
-        import io
-
-        import pyarrow as pa
-
-        df = self._series(req)
-        schema = _arrow_schema(df)
+        The scan is read before the header, so a failed read is one JSON
+        error line the client raises. Errors after the header stay
+        IN-BAND: a JSON line where the client expects a length prefix
+        would read as a bogus u32 and hang the connection, so a failure
+        still sends the terminator and reports through the status line
+        (the client re-raises it instead of returning a truncated
+        table)."""
+        table = self._read(req)
         batch_rows = max(int(req.get("batch_rows", 4096)), 1)
-        yield {
-            "arrow_frames": True,
-            "framing": "u32be",
-            "schema": str(schema),
-        }
+        yield {"arrow_frames": True, "framing": "u32be", "schema": str(table.schema)}
         done = 0
         try:
-            buf: list[dict] = []
-
-            def frame(rows: list[dict]) -> tuple:
-                batch = pa.RecordBatch.from_pylist(rows, schema=schema)
+            # an EMPTY scan still sends one frame, schema only, so the
+            # client builds a typed-empty table
+            for part in table.to_batches(max_chunksize=batch_rows) or [table]:
                 sink = io.BytesIO()
-                with pa.ipc.new_stream(sink, schema) as w:
-                    w.write_batch(batch)
-                return ("frame", sink.getvalue())
-
-            for row in df.toLocalIterator():
-                buf.append(row.asDict(recursive=True))
-                if len(buf) >= batch_rows:
-                    yield frame(buf)
-                    done += 1
-                    buf = []
-            # an EMPTY scan still emits one zero-row frame: the IPC
-            # stream is the schema's authoritative wire form, so the
-            # client materializes a typed-empty table instead of a
-            # column-less pa.table({})
-            if buf or done == 0:
-                yield frame(buf)
+                with pa.ipc.new_stream(sink, table.schema) as w:
+                    w.write(part)
+                yield ("frame", sink.getvalue())
                 done += 1
         except Exception as exc:
             yield ("frame", b"")
@@ -284,8 +300,6 @@ def fetch_arrow(host: str, port: int, req: dict, timeout: float = 60.0):
     Short reads raise ConnectionError (a dropped server must never look
     like a clean terminator → silently truncated table), and the
     trailing status line re-raises mid-stream server failures."""
-    import pyarrow as pa
-
     def read_exact(rfile, n: int) -> bytes:
         buf = b""
         while len(buf) < n:
@@ -328,11 +342,6 @@ def fetch_arrow(host: str, port: int, req: dict, timeout: float = 60.0):
         status = json.loads(status_line)
         if "error" in status:
             raise RuntimeError(status["error"])
-        if not batches:
-            # pre-typed-empty servers only (current ones always frame the
-            # schema); fall back to a schema-bearing empty table if any
-            # frame announced one
-            return pa.table({}) if schema is None else schema.empty_table()
         return pa.Table.from_batches(batches, schema=schema)
 
 

@@ -1221,13 +1221,12 @@ def merge_delta(
     with ThreadPoolExecutor(max_workers=2) as pool:
         dup_f = pool.submit(dup.count)
         stats_f = pool.submit(stats_df.collect)
-        n_dup = dup_f.result()
+        if dup_f.result() > 0:
+            raise ValueError(
+                f"MERGE source has duplicate keys on {on}: multiple source "
+                f"rows would match one target row (nondeterministic merge)"
+            )
         stats_rows = stats_f.result()
-    if n_dup > 0:
-        raise ValueError(
-            f"MERGE source has duplicate keys on {on}: multiple source "
-            f"rows would match one target row (nondeterministic merge)"
-        )
     stats = {
         _rel_of_uri(table, r[0]): (
             int(r[1]), int(r[2] or 0), int(r[3] or 0)

@@ -244,15 +244,13 @@ def read_trade_stream_queue(
     `distributed=False` selects the driver-read simple source — same
     offsets, same replay contract, fewer moving parts — for
     control-plane-sized queues."""
-    from marketdb_spark.streaming.queuesource import register_queue_source
+    from marketdb_spark.streaming.queuesource import QUEUE_SCHEMA, register_queue_source
 
     register_queue_source(spark)
     fmt = "spoolqueue_dist" if distributed else "spoolqueue"
     # explicit schema: skips the engine's per-load schema-resolution
     # worker spawn on the Python DataSource lane (~0.1 s per query start)
-    reader = spark.readStream.format(fmt).schema(
-        "segment string, line_no long, value string"
-    )
+    reader = spark.readStream.format(fmt).schema(QUEUE_SCHEMA)
     if max_lines_per_trigger is not None:
         # per-trigger admission bound (≙ the reference consumer's
         # buffered(1000), MarketLoader.scala:49,55; Kafka's

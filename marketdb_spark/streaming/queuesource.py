@@ -68,6 +68,11 @@ except ImportError:  # pragma: no cover - older pyspark
         pass
 
 
+# the row shape of both spool sources; readers pass it to .schema() to
+# skip the engine's per-load schema-resolution worker spawn
+QUEUE_SCHEMA = "segment string, line_no long, value string"
+
+
 def _segments(path: str, suffix: str) -> list[str]:
     """Segment file names in arrival (= lexicographic) order."""
     if not os.path.isdir(path):
@@ -187,7 +192,7 @@ class SpoolQueueDataSource(DataSource):
         return "spoolqueue"
 
     def schema(self) -> str:
-        return "segment string, line_no long, value string"
+        return QUEUE_SCHEMA
 
     def simpleStreamReader(self, schema) -> SpoolQueueStreamReader:
         return SpoolQueueStreamReader(self.options)
@@ -393,7 +398,7 @@ class SpoolQueueDistDataSource(DataSource):
         return "spoolqueue_dist"
 
     def schema(self) -> str:
-        return "segment string, line_no long, value string"
+        return QUEUE_SCHEMA
 
     def streamReader(self, schema) -> SpoolQueuePartitionedStreamReader:
         return SpoolQueuePartitionedStreamReader(self.options)

@@ -1,6 +1,7 @@
 #!/usr/bin/env python
-"""Hash-compare registered queries against their DuckDB oracles through
-the driver contract (vanilla session — the grading driver's shape).
+"""Compare registered queries against their DuckDB oracles through the
+``__spark_entry__`` contract on a vanilla session, with the same
+canonical form as tests/test_oracle.py (``marketdb_spark.oracle``).
 
     python scripts/oracle_check.py [--sf=/root/testdata/sf0.01] [name ...]
 
@@ -9,7 +10,6 @@ No names → the full registry. PASS = "MISMATCHES: none".
 
 from __future__ import annotations
 
-import hashlib
 import os
 import sys
 
@@ -25,11 +25,10 @@ def main() -> None:
         else:
             names.append(a)
 
-    import duckdb
-    import pandas as pd
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as mod
+    from marketdb_spark.oracle import compare, duckdb_connection
 
     spark = (
         SparkSession.builder.master(
@@ -40,42 +39,21 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    def canon(df: pd.DataFrame):
-        df = df.reindex(sorted(df.columns), axis=1)
-        for c in df.columns:
-            if pd.api.types.is_datetime64_any_dtype(df[c]):
-                df[c] = df[c].astype("datetime64[us]")
-        lines = sorted(
-            ",".join(map(str, r))
-            for r in df.itertuples(index=False, name=None)
-        )
-        return hashlib.md5("\n".join(lines).encode()).hexdigest(), len(df)
-
     qs, osql = mod.queries(), mod.oracle_sql()
     if not names:
         names = list(qs)
     unknown = [n for n in names if n not in qs]
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf}/{t}.parquet')"
-        )
+    con = duckdb_connection(sf)
     bad = []
     for n in names:
         if n not in osql:
             print(f"# {n}: rows-only ({qs[n](spark, sf).count()} rows)")
             continue
-        s = canon(qs[n](spark, sf).toPandas())
-        d = canon(con.execute(osql[n]).fetchdf())
-        status = "ok" if s == d else "MISMATCH"
-        print(f"# {n}: {status} spark={s[1]} duck={d[1]}")
-        if s != d:
+        res = compare(n, qs[n](spark, sf), osql[n], con)
+        print(res)
+        if not res.ok:
             bad.append(n)
     print(f"MISMATCHES: {bad or 'none'} ({len(names)} queries, sf={sf})")
 

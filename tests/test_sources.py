@@ -419,9 +419,10 @@ class TestStore:
 
 class TestQueryServer:
     """W1 network façade: the reference's scan service (MarketDbProtocol's
-    Open/ReadRows/Close over finagle) re-expressed as TCP/ndjson over the
-    lazy-DataFrame scan path. One server in the driver process; clients
-    pull row batches — nothing is materialized beyond the requested batch."""
+    Open/ReadRows/Close over finagle) re-expressed as TCP/ndjson. Every op
+    reads the request's partition directories in place with pyarrow (no
+    Spark job); server memory is one request's result, and open cursors
+    are capped at MAX_OPEN_SCANS."""
 
     @pytest.fixture()
     def server(self, spark, trades_df, tmp_path):
@@ -726,6 +727,194 @@ class TestQueryServer:
             ids13, ids14 = f13.result(60), f14.result(60)
         assert ids13 == [0, 1, 2, 3, 4, 5000, 5, 5001, 6, 7, 8, 9]
         assert ids14 == [1000 + i for i in range(10)]
+
+    def test_open_scans_are_capped(self, server):
+        """Clients that open scans and drop their sockets cannot grow the
+        registry past MAX_OPEN_SCANS: the extra `open`s are refused in
+        band, handler threads end with their connections, the server keeps
+        serving, and `close` frees a slot."""
+        import threading
+        import time
+
+        from marketdb_spark.server import MAX_OPEN_SCANS, request
+
+        h, p = server.host, server.port
+        threads0 = threading.active_count()
+        refused = []
+        for _ in range(MAX_OPEN_SCANS + 3):
+            (out,) = request(h, p, self._SCAN_13)  # socket closed on return
+            if "error" in out:
+                refused.append(out)
+        assert refused == [{"error": "too many open scans"}] * 3
+        assert len(server._scans) == MAX_OPEN_SCANS
+        deadline = time.monotonic() + 30
+        while threading.active_count() > threads0 and time.monotonic() < deadline:
+            time.sleep(0.05)
+        assert threading.active_count() <= threads0
+        count = {**self._SCAN_13, "op": "count"}
+        assert request(h, p, count) == [{"count": 12}]
+        sid = next(iter(server._scans))
+        assert request(h, p, {"op": "close", "scan_id": sid}) == [{"closed": True}]
+        assert "scan_id" in request(h, p, self._SCAN_13)[0]
+        assert len(server._scans) == MAX_OPEN_SCANS
+
+    def test_missing_store_is_error_in_band(self, spark, tmp_path):
+        from marketdb_spark.server import MarketDbServer, fetch_arrow, request
+
+        missing = str(tmp_path / "no_such_store")
+        req = {**self._SCAN_13, "op": "count"}
+        with MarketDbServer(spark, missing, missing) as srv:
+            (out,) = request(srv.host, srv.port, req)
+            assert "FileNotFoundError" in out["error"]
+            with pytest.raises(RuntimeError, match="FileNotFoundError"):
+                fetch_arrow(srv.host, srv.port, req)
+            assert "error" in request(srv.host, srv.port, req)[0]
+
+
+class TestServerMatchesSpark:
+    """Differential test of the server's in-place read against the lazy
+    Spark handles (``MarketDb.trades/orders(...).collect()`` is the
+    oracle): random (market, security, interval) requests over a store of
+    three appends spanning days with a gap (2013-02-03 has no directory),
+    orders with NULL and non-NULL ``deal``, and same-time ties."""
+
+    DAYS = (0, 1, 3)  # day offsets from 2013-02-01 that hold data
+
+    @pytest.fixture(scope="class")
+    def db(self, spark, tmp_path_factory):
+        import datetime as dt
+        import random
+
+        from marketdb_spark.client import MarketDb
+        from tests.conftest import ORDERS_SCHEMA, TRADES_SCHEMA
+
+        rnd = random.Random(7)
+        base = dt.datetime(2013, 2, 1)
+        # three appends: day 0 first, then the later days in two halves.
+        # Appends into an existing store write their key columns first
+        # (the anti-join's order), so the later days' files order their
+        # columns unlike the store's first file, whose footer types
+        # Spark's read; both halves land in the same directories
+        trades, orders = ([], [], []), ([], [], [])
+        for i in range(400):
+            market, sec = rnd.choice(["RTS", "MICEX"]), rnd.choice(["S1", "S2", "S3"])
+            day = rnd.choice(self.DAYS)
+            part = 0 if day == 0 else 1 + i % 2
+            # coarse minutes make same-time ties across ids common
+            t = base + dt.timedelta(days=day, minutes=rnd.randrange(0, 1440, 7))
+            price = Decimal(rnd.randrange(1, 10**9)) / 10**8
+            trades[part].append((market, sec, i, price, rnd.randint(1, 9), t, i % 5 == 0))
+            # deal prices below 1e-6 too: Spark renders those in exponent form
+            deal = (i * 3, Decimal(rnd.randrange(1000)) / 10**8) if i % 3 else None
+            orders[part].append((market, sec, i, t, 1, 2, -1, price, 5, 4, deal))
+        root = tmp_path_factory.mktemp("server_diff")
+        db = MarketDb(spark, trades_path=str(root / "trades"), orders_path=str(root / "orders"))
+        for t_rows, o_rows in zip(trades, orders):
+            db.add_trades(spark.createDataFrame(t_rows, TRADES_SCHEMA))
+            db.add_orders(spark.createDataFrame(o_rows, ORDERS_SCHEMA))
+        return db
+
+    @pytest.fixture(scope="class")
+    def server(self, spark, db):
+        from marketdb_spark.server import MarketDbServer
+
+        with MarketDbServer(spark, db.trades_path, db.orders_path) as srv:
+            yield srv
+
+    @staticmethod
+    def _typed(value, dtype):
+        """A served JSON value back in the Python type Spark collects."""
+        import datetime as dt
+
+        from pyspark.sql import types as T
+
+        if value is None:
+            return None
+        if isinstance(dtype, T.StructType):
+            return {f.name: TestServerMatchesSpark._typed(value[f.name], f.dataType)
+                    for f in dtype.fields}
+        parse = {T.TimestampType: dt.datetime.fromisoformat,
+                 T.DateType: dt.date.fromisoformat,
+                 T.DecimalType: Decimal}.get(type(dtype))
+        return parse(value) if parse else value
+
+    def test_every_op_matches_spark(self, spark, db, server):
+        import datetime as dt
+
+        import pyarrow as pa
+        from hypothesis import HealthCheck, given, settings
+        from hypothesis import strategies as st
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from marketdb_spark.server import fetch_arrow, request
+
+        h, p = server.host, server.port
+        base = dt.datetime(2013, 2, 1)
+
+        @settings(max_examples=25, deadline=None,
+                  suppress_health_check=[HealthCheck.function_scoped_fixture])
+        @given(
+            kind=st.sampled_from(["trades", "orders"]),
+            market=st.sampled_from(["RTS", "MICEX", "NYSE"]),
+            security=st.sampled_from(["S1", "S2", "S3", "S9"]),
+            # starts from the day before the data to the day after it;
+            # lengths from one instant to three days (gap day included)
+            start_min=st.integers(-1440, 5 * 1440),
+            length_min=st.integers(0, 3 * 1440),
+            page=st.integers(1, 40),
+        )
+        def check(kind, market, security, start_min, length_min, page):
+            a = base + dt.timedelta(minutes=start_min)
+            b = a + dt.timedelta(minutes=length_min)
+            interval = [str(a), str(b)]
+            df = getattr(db, kind)(market, security, tuple(interval))
+            want = [r.asDict(recursive=True) for r in df.collect()]
+            req = {"kind": kind, "market": market, "security": security,
+                   "interval": interval}
+
+            assert request(h, p, {**req, "op": "count"}) == [{"count": len(want)}]
+
+            def typed(rows):
+                return [{f.name: self._typed(r[f.name], f.dataType) for f in df.schema.fields}
+                        for r in rows]
+
+            *rows, done = request(h, p, {**req, "op": kind})
+            assert done == {"done": len(want)}
+            assert [list(r) for r in rows] == [df.columns] * len(rows)
+            assert typed(rows) == want
+
+            sid = request(h, p, {**req, "op": "open"})[0]["scan_id"]
+            paged = []
+            while True:
+                *batch, end = request(h, p, {"op": "next", "scan_id": sid, "n": page})
+                paged += batch
+                if end["exhausted"]:
+                    break
+            assert typed(paged) == want
+
+            tbl = fetch_arrow(h, p, {**req, "batch_rows": page})
+            spark_schema = to_arrow_schema(df.schema)
+            expect = pa.schema([
+                f.with_type(pa.timestamp("us")) if pa.types.is_timestamp(f.type) else f
+                for f in spark_schema
+            ])
+            assert tbl.schema.equals(expect), (tbl.schema, expect)
+            assert tbl.to_pylist() == want
+
+        check()
+
+    def test_interval_without_directory_is_typed_empty(self, db, server):
+        from marketdb_spark.server import fetch_arrow, request
+
+        req = {"kind": "orders", "market": "RTS", "security": "S1",
+               "interval": ["2013-02-03 00:00:00", "2013-02-03 23:59:59"]}
+        assert request(server.host, server.port, {**req, "op": "count"}) == [{"count": 0}]
+        tbl = fetch_arrow(server.host, server.port, req)
+        assert tbl.num_rows == 0
+        assert tbl.schema.names[-2:] == ["market", "date"]
+        assert str(tbl.schema.field("deal").type) == (
+            "struct<id: int64, price: decimal128(18, 8)>"
+        )
 
 
 class TestSnapshotTable:
